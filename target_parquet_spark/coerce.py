@@ -3,8 +3,9 @@
 The reference coerces record values one at a time in a Python loop
 (reference target_parquet/sinks.py:72-112, 165-166).  Here each declared
 field becomes ONE vectorized Column expression applied to the whole
-micro-batch — the per-record loop disappears and the coercions run inside
-whole-stage codegen on the JVM.
+micro-batch — the per-record loop disappears and the coercions run as
+generated code on the JVM (the date-time format chain, which only non-ISO
+rows reach, runs interpreted; see ``lenient_timestamp``).
 
 Input convention: the Singer RECORD payload is parsed with
 ``from_json(record, <all-string struct>)`` so every declared field arrives
@@ -37,6 +38,8 @@ lenient mode writes null and counts a violation (see target.py).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -178,12 +181,6 @@ _TZ_ABBREV_TRAILING = (
     + r")\s*$"
 )
 
-# The _TZ_TS_FORMATS are tried against the tz-substituted string only;
-# the base formats keep the smaller cleaning tree (a single Column
-# expression is re-inlined per format attempt, so tree size is a real
-# codegen-memory budget — the first cut of this feature OOM'd the JVM
-# by inlining a 26-branch CASE into all 57 attempts).
-
 # Leading weekday tokens dateutil skips ("Tuesday, June 3, 2021");
 # anchored, so month names containing weekday substrings can't be hit.
 _WEEKDAY_PREFIX = (
@@ -192,19 +189,21 @@ _WEEKDAY_PREFIX = (
 )
 
 
-def lenient_timestamp(raw: Column) -> Column:
-    """Best-effort string -> timestamp; null (never error) on failure.
+def _once(value: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(value)`` as a one-element ``transform`` lambda.  Spark
+    evaluates higher-order functions interpreted, argument included, so
+    none of it enters generated code; and ``value`` is computed once per
+    row however often ``fn`` refers to it (interpreted evaluation has no
+    common-subexpression elimination)."""
+    return F.element_at(F.transform(F.array(value), fn), 1)
 
-    ``try_cast(timestamp)`` handles the ISO-8601 family (``T`` separator,
-    ``Z`` / numeric offsets, date-only, fractional seconds); the
-    ``try_to_timestamp`` chain picks up common non-ISO spellings.  The
-    cleaning pass normalizes the dateutil-isms onto the format chain
-    (r5+r6): leading weekday names ("Tuesday, June 3, 2021"), ordinal
-    day suffixes and the word "of" ("3rd of June 2021"), commas
-    anywhere (dateutil treats them as whitespace), and an am/pm
-    attached to its hour digit ("4pm" -> "4 pm").  Result is truncated
-    to millisecond precision (reference pa.timestamp("ms")).
-    """
+
+def _clean(raw: Column) -> Column:
+    """Normalize the dateutil-isms onto the format chain: leading weekday
+    names ("Tuesday, June 3, 2021"), ordinal day suffixes and the
+    word "of" ("3rd of June 2021"), commas anywhere (dateutil treats them
+    as whitespace), and an am/pm attached to its hour digit ("4pm" ->
+    "4 pm")."""
     cleaned = F.regexp_replace(raw, _WEEKDAY_PREFIX, "")
     cleaned = F.regexp_replace(
         F.regexp_replace(cleaned, r"(?i)(\d{1,2})(st|nd|rd|th)\b", "$1"),
@@ -213,18 +212,63 @@ def lenient_timestamp(raw: Column) -> Column:
     )
     cleaned = F.regexp_replace(cleaned, r",\s*", " ")
     cleaned = F.regexp_replace(cleaned, r"(?i)(\d)\s*(am|pm)\b", "$1 $2")
-    cleaned = F.trim(F.regexp_replace(cleaned, r"\s+", " "))
-    # tzinfos substitution (r7): a trailing mapped abbreviation becomes
-    # its numeric offset so the XXX formats pick it up.  A LINEAR chain
-    # of anchored replaces (each leaves non-matching strings untouched;
-    # at most one can match, and the \s anchor keeps 3-letter tails of
-    # 4-letter abbreviations — EST in WEST/CEST/AEST, KST in AKST —
-    # from double-firing) keeps the expression tree linear in the map
-    # size, where a CASE-chain re-inlining the cleaning tree per branch
-    # blew up codegen.
-    cleaned_tz = cleaned
+    return F.trim(F.regexp_replace(cleaned, r"\s+", " "))
+
+
+def _substitute_tz(cleaned: Column) -> Column:
+    """tzinfos substitution: a trailing mapped abbreviation becomes its
+    numeric offset so the XXX formats pick it up.  A linear chain of
+    anchored replaces: each leaves non-matching strings untouched, at
+    most one can match, and the \\s anchor keeps 3-letter tails of
+    4-letter abbreviations (EST in WEST/CEST/AEST, KST in AKST) from
+    double-firing."""
     for k, v in TZ_ABBREV_OFFSETS.items():
-        cleaned_tz = F.regexp_replace(cleaned_tz, rf"\s{k}$", f" {v}")
+        cleaned = F.regexp_replace(cleaned, rf"\s{k}$", f" {v}")
+    return cleaned
+
+
+def _try_formats(s: Column, formats: list[str]) -> Column:
+    return F.coalesce(*[F.try_to_timestamp(s, F.lit(fmt)) for fmt in formats])
+
+
+def _parse_cleaned(cleaned: Column) -> Column:
+    """The 42 base formats on the cleaned string, then the 17 zone
+    formats on its tz-substituted form.  The substitution runs only for
+    rows no base format matched."""
+    return F.coalesce(
+        _try_formats(cleaned, _TS_FORMATS),
+        _once(
+            _substitute_tz(cleaned),
+            lambda tz: _try_formats(tz, _TZ_TS_FORMATS),
+        ),
+    )
+
+
+def lenient_timestamp(raw: Column) -> Column:
+    """Best-effort string -> timestamp; null (never error) on failure.
+
+    Two branches, tried in order:
+
+    - **ISO** (nearly every Singer row: date-times are RFC 3339):
+      ``try_cast(timestamp)`` handles the ISO-8601 family (``T``
+      separator, ``Z`` / numeric offsets, date-only, fractional
+      seconds).  It compiles into the projection's generated code.
+    - **Format chain**, only for rows the ISO branch left null (non-ISO
+      spellings, mapped zone abbreviations, unparseable text, null): the
+      cleaning pass and the 59 ``try_to_timestamp`` attempts, inside
+      ``transform`` lambdas (``_once``).  Spark evaluates those
+      interpreted, so the chain never enters generated code, and
+      ``coalesce`` reaches it only when the ISO branch is null.
+
+    Inlined, the chain pushed the whole-stage method past Janino's 64 KB
+    limit: the compile failed, and the stage fell back on every call.
+    The lambda instead keeps the projection out of whole-stage codegen;
+    Spark compiles it as a plain projection, whose code it splits into
+    methods that fit.
+
+    Result is truncated to millisecond precision (reference
+    pa.timestamp("ms")).
+    """
     # The ISO cast ALSO resolves bare zone abbreviations — to java.time
     # REGION zones with DST ("... CST" in July casts as America/Chicago
     # = -05:00 where the map's contract says -06:00), so it must be
@@ -235,15 +279,8 @@ def lenient_timestamp(raw: Column) -> Column:
     iso = F.when(
         ~raw.rlike(_TZ_ABBREV_TRAILING), raw.try_cast("timestamp")
     )
-    parsed = F.coalesce(
-        iso,
-        *[F.try_to_timestamp(cleaned, F.lit(fmt)) for fmt in _TS_FORMATS],
-        *[
-            F.try_to_timestamp(cleaned_tz, F.lit(fmt))
-            for fmt in _TZ_TS_FORMATS
-        ],
-    )
-    return F.date_trunc("millisecond", parsed)
+    chain = _once(_clean(raw), _parse_cleaned)
+    return F.date_trunc("millisecond", F.coalesce(iso, chain))
 
 
 def coerce_expr(raw: Column, rf: ResolvedField) -> Column:

@@ -13,7 +13,10 @@ Two record-decoding paths:
 - **jvm** (default, the scale path): ``from_json(record, all-string
   struct)`` captures each declared field's raw JSON text, then coerce.py's
   Column expressions produce the typed columns.  Whole-stage codegen, zero
-  Python in the hot loop.
+  Python in the hot loop.  A ``format: date-time`` field keeps its
+  projection in expression-level generated code instead: the non-ISO
+  format chain is an interpreted lambda (coerce.lenient_timestamp), which
+  Spark does not fuse into a whole stage.
 - **exact** (compat path): ``mapInPandas`` applies Python-semantics
   coercion (``str(True) == "True"``, ``json.dumps`` nested serialization,
   dateutil-grade timestamp parsing) — Arrow-batched, used when byte-level

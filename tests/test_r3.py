@@ -726,3 +726,21 @@ def test_mean_inequality_chain(run):
         # AM >= GM >= HM, with equality only for constant data
         assert r.arith_mean >= r.geo_mean - 1e-6
         assert r.geo_mean >= r.harm_mean - 1e-6
+
+
+def test_normalized_dedup_empty_corpus_matches_oracle(spark, sf_dir, tmp_path):
+    """A 0-row corpus gives all-zero counts on both engines."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from target_parquet_spark.queries import ORACLES
+
+    schema = pq.read_schema(f"{sf_dir}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+    pq.write_table(schema.empty_table(), path)
+
+    got = QUERIES["dedup_exact_normalized"](spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(ORACLES["dedup_exact_normalized"]).fetchall()
+    assert [tuple(r) for r in got] == want == [(0, 0, 0)]
