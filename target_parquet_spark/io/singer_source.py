@@ -88,7 +88,10 @@ def raw_record_struct(fields: list[ResolvedField]) -> T.StructType:
 
 
 def decode_records_jvm(records: DataFrame, fields: list[ResolvedField]) -> DataFrame:
-    """The JVM hot path: raw-capture parse + vectorized coercion select."""
+    """The JVM hot path: raw-capture parse + vectorized coercion select.
+    The targets run the same two steps through ``target.Version.parse``
+    and ``Version.decode``, so that the write's validation count reads
+    the one parse too."""
     parsed = records.withColumn(
         "_rec", F.from_json(F.col("record_json"), raw_record_struct(fields))
     )

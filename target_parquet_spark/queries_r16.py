@@ -300,11 +300,12 @@ def dedup_substring_remove(spark, sf_dir):
     is equivalent to min(doc_id) < max(doc_id) over the gh partition —
     constant aggregation state, no distinct, no join — so one window
     over ONE gh exchange of one gram-stream derivation replaces all
-    three.  The join-back then BROADCASTS the doc-cardinality interval
-    table so the heavy token arrays never ride an exchange at all
-    (guide §8: decide on small rows, move big rows zero times); at a
-    scale where the span table outgrows the broadcast cap, drop the
-    hint and the same plan runs as a sort-merge join."""
+    three.  The join-back carries no broadcast hint: the interval table
+    has one row per doc with a duplicated run, so it grows with the
+    corpus.  Spark broadcasts it while its size (estimated, or measured
+    at runtime under AQE) is under the broadcast threshold, as at sf0.1,
+    so the token arrays never ride an exchange there; past that it plans
+    a sort-merge join instead of failing on an oversized broadcast."""
     corpus = _spark_corpus(spark, sf_dir)
     toked = corpus.select("doc_id", X.tokens(F.col("text")).alias("toks"))
     gh = X.hash60(F.col("gram"))
@@ -327,7 +328,7 @@ def dedup_substring_remove(spark, sf_dir):
     iv = lr.groupBy("doc_id").agg(
         F.collect_list(F.struct("s", "e")).alias("ivs")
     )
-    j = toked.join(F.broadcast(iv), "doc_id", "left").withColumn(
+    j = toked.join(iv, "doc_id", "left").withColumn(
         "ivs",
         F.coalesce(F.col("ivs"), F.array().cast("array<struct<s:int,e:int>>")),
     )

@@ -8,23 +8,37 @@ batch buffer; singer-sdk drain loop).  The Spark-native shape:
   message files (the file source is the durable stand-in for a stdin pipe;
   any line-oriented streaming source — Kafka, socket — plugs in the same).
 - ``foreachBatch``: each micro-batch IS the reference's batch buffer (B1).
-  Inside the batch the existing batch-path machinery runs unchanged:
-  envelope parse (JVM ``from_json``), SCHEMA collect (rare, driver-side
-  DDL), per-stream vectorized decode + validation, parquet append.
+  It runs the batch target's job plan over its persisted envelope:
+
+  1. **Control collect** (1 job, which also fills the cache): the batch's
+     SCHEMA rows, applied to the registry in arrival order.
+  2. **Census** (the batch target's ``take_census``; 2 jobs under AQE):
+     RECORD count per registered stream, the first orphan RECORD, the last
+     STATE, key-null counts, and invalid counts when strict or quarantine
+     mode needs them.  Contract checks fail the batch here, before any
+     write.
+  3. **Writes** (1 job per stream with RECORDs in the batch): records are
+     parsed once, coerced and appended.  A quarantine write is added only
+     for a stream the census found invalid records in.
 - the checkpoint directory is Spark's commit log == Singer STATE (S4): on
   restart, already-committed files are not re-ingested.  The latest STATE
   message seen is additionally written to ``state.json`` per epoch so a
   downstream tap-orchestrator can read it exactly as it would read the
   reference's stdout state emission.
 
-Schema registry semantics: a SCHEMA message governs all later RECORDs of
-its stream — across micro-batches — until re-declared (schema evolution →
-version-append + mergeSchema read, BUG-4 fixed; reference
+Schema registry semantics: a SCHEMA message governs all RECORDs of its
+stream — across micro-batches — until re-declared; within one micro-batch
+every RECORD of a stream decodes under the stream's latest SCHEMA (schema
+evolution → version-append + mergeSchema read, BUG-4 fixed; reference
 tests/README.md:73-87).  The registry lives on the driver (exactly where
 the reference kept its sink registry, reference writers.py:14-24) and is
 persisted to ``_schema_registry.json`` in the output root after every
 SCHEMA message — committed micro-batches are NOT replayed on restart, so
 a relaunched target reloads stream DDL from the sidecar, not the stream.
+Policy differences from the batch target: a RECORD for a stream with no
+registered SCHEMA fails the query in strict mode only (lenient skips it:
+in a long-lived stream the SCHEMA may simply be in flight), and strict
+mode rejects invalid records but not nulls in non-nullable columns.
 """
 
 from __future__ import annotations
@@ -36,12 +50,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from target_parquet_spark.io.parquet_sink import ParquetStreamSink
-from target_parquet_spark.io.singer_source import (
-    decode_records_jvm,
-    parse_envelope,
-    raw_record_struct,
-)
+from target_parquet_spark.io.singer_source import parse_envelope
 from target_parquet_spark.schema import resolve_schema
+from target_parquet_spark.target import (
+    SingerValidationError,
+    Version,
+    enforce_census,
+    quarantine_invalid,
+    take_census,
+)
 
 __all__ = ["SingerStreamTarget"]
 
@@ -100,33 +117,67 @@ class SingerStreamTarget:
     # -- micro-batch processor ----------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        env = parse_envelope(batch_df)
-        env = env.persist()
+        strict = bool(self.config.get("strict_validation"))
+        # Quarantine is a lenient-mode option: strict fails the batch first.
+        quarantine = None if strict else self.config.get("quarantine_path")
+        validate = strict or bool(quarantine)
+        env = parse_envelope(batch_df).persist()
         try:
             self._apply_schemas(env)
-            streams_in_batch = [
-                r.stream
-                for r in env.filter(F.col("msg_type") == "RECORD")
-                .select("stream")
-                .distinct()
-                .collect()
-            ]
-            for stream in streams_in_batch:
-                self._write_stream_records(env, stream)
-            self._emit_state(env, epoch_id)
+            versions = self._versions(validate)
+            census = take_census(env, versions, validate)
+            if census.orphan is not None and strict:
+                raise SingerValidationError(
+                    f"RECORD for stream {census.orphan!r} arrived before its "
+                    "SCHEMA message"
+                )
+            enforce_census(census, versions, strict)
+            seen = [v for v in versions if census.counts[v.k]]
+            for v in seen:
+                n_bad = census.invalid[v.k] if quarantine else 0
+                if v.fields:
+                    parsed = v.parse(env)
+                    if n_bad:
+                        parsed = quarantine_invalid(parsed, v.pred, v.stream, quarantine)
+                    self.sink.write(v.stream, v.decode(parsed), key_properties=v.key_properties)
+                self._metrics[v.stream] = (
+                    self._metrics.get(v.stream, 0) + census.counts[v.k] - n_bad
+                )
+            if seen:
+                self._write_metrics()
         finally:
             env.unpersist()
+        if census.state is not None:
+            payload = {"epoch": epoch_id, "state": census.state}
+            with open(os.path.join(self.sink.root, "state.json"), "w") as fh:
+                json.dump(payload, fh)
+
+    def _versions(self, validate: bool) -> list[Version]:
+        """One census Version per registered stream, under the stream's
+        latest SCHEMA; the predicate is compiled only when the census
+        evaluates it (``validate``)."""
+        versions: list[Version] = []
+        for stream, (schema, key_properties, _version, widened) in self._registry.items():
+            fixed = (self.config.get("fixed_headers") or {}).get(stream)
+            fields = self._apply_overrides(
+                resolve_schema(schema, fixed_headers=fixed), widened
+            )
+            owns = (F.col("msg_type") == "RECORD") & (F.col("stream") == stream)
+            v = Version(len(versions), stream, owns, fields, key_properties)
+            if validate:
+                v.compile(schema, self.ref_base_dir, self.ref_registry)
+            versions.append(v)
+        return versions
 
     def _apply_schemas(self, env: DataFrame) -> None:
         rows = (
             env.filter(F.col("msg_type") == "SCHEMA")
             .select("_mid", "stream", "schema_json", "key_properties")
-            .orderBy("_mid")
             .collect()
         )
         from target_parquet_spark.schema import widen_versions
 
-        for r in rows:
+        for r in sorted(rows, key=lambda r: r["_mid"]):
             prev = self._registry.get(r.stream)
             version = prev[2] + 1 if prev else 0
             schema = json.loads(r.schema_json) if r.schema_json else {}
@@ -282,96 +333,6 @@ class SingerStreamTarget:
         with open(tmp, "w") as fh:
             json.dump(payload, fh)
         os.replace(tmp, self._registry_path)
-
-    def _write_stream_records(self, env: DataFrame, stream: str) -> None:
-        reg = self._registry.get(stream)
-        if reg is None:
-            # RECORD whose stream has no SCHEMA in the registry (this or
-            # any earlier checkpointed batch).  Strict mode fails the
-            # query — the batch target's contract (SDK record-before-
-            # schema).  Lenient skips: in a long-lived stream the SCHEMA
-            # may simply be in flight, and failing the whole query for
-            # one early record is the wrong default.
-            if self.config.get("strict_validation"):
-                from target_parquet_spark.target import SingerValidationError
-
-                raise SingerValidationError(
-                    f"RECORD for stream {stream!r} arrived before its "
-                    "SCHEMA message"
-                )
-            return
-        schema, key_properties, _version, widened = reg
-        fixed = (self.config.get("fixed_headers") or {}).get(stream)
-        fields = self._apply_overrides(
-            resolve_schema(schema, fixed_headers=fixed), widened
-        )
-        records = env.filter(
-            (F.col("msg_type") == "RECORD") & (F.col("stream") == stream)
-        )
-        parsed = records.withColumn(
-            "_rec", F.from_json(F.col("record_json"), raw_record_struct(fields))
-        )
-        # Key-integrity parity with the batch target: key properties must
-        # resolve to columns, and every record must carry them non-null —
-        # structural guarantees, enforced in every validation mode via
-        # the SAME helpers the batch target runs (no twin to drift).
-        from target_parquet_spark.target import (
-            enforce_keys_present,
-            enforce_undeclared_keys,
-        )
-
-        enforce_undeclared_keys(stream, fields, key_properties)
-        enforce_keys_present(stream, parsed, fields, key_properties)
-
-        # Validation parity with the batch target (V1-V4): strict fails
-        # the streaming query before the batch writes; lenient with a
-        # quarantine_path reroutes invalid records and keeps the main
-        # sink clean; plain lenient passes through.
-        from target_parquet_spark.validation import compile_predicate
-
-        pred = compile_predicate(
-            schema,
-            source_col="_rec",
-            raw_json_col="record_json",
-            declared_cols=[f.name for f in fields],
-            ref_base_dir=self.ref_base_dir,
-            ref_registry=self.ref_registry,
-        )
-        n_bad = 0
-        if self.config.get("strict_validation"):
-            from target_parquet_spark.target import SingerValidationError
-
-            n_bad = parsed.filter(~pred).count()
-            if n_bad:
-                raise SingerValidationError(
-                    f"stream {stream!r}: {n_bad} record(s) failed schema "
-                    "validation in streaming batch"
-                )
-        elif self.config.get("quarantine_path"):
-            from target_parquet_spark.target import quarantine_invalid
-
-            parsed, n_bad = quarantine_invalid(
-                parsed, pred, stream, self.config["quarantine_path"]
-            )
-        typed = decode_records_jvm(parsed, fields)
-        self.sink.write(stream, typed, key_properties=key_properties)
-        self._metrics[stream] = (
-            self._metrics.get(stream, 0) + records.count() - n_bad
-        )
-        self._write_metrics()
-
-    def _emit_state(self, env: DataFrame, epoch_id: int) -> None:
-        rows = (
-            env.filter(F.col("msg_type") == "STATE")
-            .select("_mid", "state_json")
-            .orderBy(F.col("_mid").desc())
-            .limit(1)
-            .collect()
-        )
-        if rows and rows[0].state_json:
-            payload = {"epoch": epoch_id, "state": json.loads(rows[0].state_json)}
-            with open(os.path.join(self.sink.root, "state.json"), "w") as fh:
-                json.dump(payload, fh)
 
     def _write_metrics(self) -> None:
         # Once per micro-batch — the reference rewrote this file per RECORD

@@ -39,6 +39,9 @@ def test_record_before_schema_raises(spark, tmp_out):
     ]
     with pytest.raises(SingerValidationError, match="before its SCHEMA"):
         run(spark, tmp_out, lines)
+    # no SCHEMA in the whole input: the census has no version to route to
+    with pytest.raises(SingerValidationError, match="before its SCHEMA"):
+        run(spark, tmp_out, [msg_record("early", {"id": "1"}), msg_state({"b": 1})])
 
 
 def test_record_for_undeclared_stream_raises(spark, tmp_out):
@@ -65,12 +68,21 @@ def test_record_with_null_key_property_raises(spark, tmp_out):
 
 
 def test_record_with_absent_key_property_raises(spark, tmp_out):
+    import glob
+
     lines = [
         msg_schema("pk", {"id": STR_NULL, "v": STR_NULL}, key_properties=["id"]),
         msg_record("pk", {"v": "only-value"}),
     ]
     with pytest.raises(SingerValidationError, match="key_properties"):
         run(spark, tmp_out, lines)
+    # A key missing in a LATER stream fails the run before an earlier,
+    # clean stream is written: every key check runs in the census, ahead
+    # of all writes.
+    lines = [msg_schema("aa", {"x": STR_NULL}), msg_record("aa", {"x": "fine"})] + lines
+    with pytest.raises(SingerValidationError, match="'pk'.*key_properties"):
+        run(spark, tmp_out, lines)
+    assert not glob.glob(os.path.join(tmp_out, "aa*", "*.parquet"))
 
 
 # --- TargetDuplicateRecords / TargetNoPrimaryKeys --------------------------
@@ -288,13 +300,28 @@ def test_quarantine_reroutes_invalid_records(spark, tmp_out):
         msg_record("q", {"id": "bad", "v": -5}),
         msg_record("q", {"id": "ok2", "v": 2}),
     ]
+    # a second stream whose SCHEMA is re-declared mid-stream: its
+    # quarantine count spans both versions
+    lines += [
+        msg_schema("q2", props),
+        msg_record("q2", {"id": "a", "v": -1}),
+        msg_record("q2", {"id": "b", "v": 1}),
+        msg_schema("q2", {**props, "w": STR_NULL}),
+        msg_record("q2", {"id": "c", "v": -2, "w": "x"}),
+    ]
     qdir = os.path.join(tmp_out, "_quarantine")
     _, res = run(spark, tmp_out, lines, config={"quarantine_path": qdir})
     # main sink holds only the valid rows
     _, rows = rows_of(spark, res["paths"]["q"])
     assert sorted(r["id"] for r in rows) == ["ok1", "ok2"]
-    assert res["metrics"]["recordCount"] == {"q": 2}
-    assert res["metrics"]["validationViolations"] == {"q": 1}
+    assert res["metrics"]["recordCount"] == {"q": 2, "q2": 1}
+    assert res["metrics"]["validationViolations"] == {"q": 1, "q2": 2}
+    for stream, n in res["metrics"]["validationViolations"].items():
+        lines_out = 0
+        for f in glob.glob(os.path.join(qdir, stream, "*.json")):
+            with open(f) as fh:
+                lines_out += sum(1 for l in fh if l.strip())
+        assert lines_out == n
     # the quarantine dir carries the raw record text, replayable
     payloads = []
     for f in glob.glob(os.path.join(qdir, "q", "*.json")):

@@ -373,6 +373,9 @@ def test_empty_input_no_crash(spark, tmp_out):
 def test_state_only_input(spark, tmp_out):
     _, res = run(spark, tmp_out, [msg_state({"bookmark": 7})])
     assert res["state"] == {"bookmark": 7}
+    # the LAST STATE wins, even when its value is null
+    _, res = run(spark, tmp_out, [msg_state({"bookmark": 7}), msg_state(None)])
+    assert res["state"] is None
 
 
 def test_schema_only_stream_writes_nothing_but_sibling_writes(spark, tmp_out):
@@ -425,6 +428,10 @@ def test_malformed_json_lines_are_dropped_not_fatal(spark, tmp_out):
         "{this is not json",
         "",
         msg_record("s", {"id": 2}),
+        # a RECORD with no stream belongs to no stream: dropped, and not
+        # an orphan (no "arrived before its SCHEMA" failure)
+        json.dumps({"type": "RECORD", "stream": None, "record": {"id": 3}}),
+        json.dumps({"type": "RECORD", "record": {"id": 4}}),
         msg_state({"ok": 1}),
     ]
     _, res = run(spark, tmp_out, lines)
